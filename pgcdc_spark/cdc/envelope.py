@@ -11,13 +11,20 @@ Parsing uses ``from_json`` with an explicit schema: malformed payloads
 become NULL images instead of corrupt rows (vs the reference's unchecked
 ``as Student`` cast, src/mapping/customMapper.ts:22), and the raw line is
 kept in a dead-letter column.
+
+This module also owns the text -> typed rule every wire adapter shares
+(``checked_cast`` / ``typed_image``): pgoutput and wal2json both carry
+column values as Postgres text renderings, and both type them JVM-side
+with the same checked casts.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import (
+    BinaryType,
+    DataType,
     DateType,
     IntegerType,
     LongType,
@@ -74,3 +81,32 @@ def parse_envelope(raw: DataFrame, json_col: str = "value",
         F.col("_env.old").alias("old"),
         F.col("_env._corrupt").alias("_corrupt"),
     )
+
+
+def checked_cast(text: Column, dt: DataType) -> Column:
+    """A Postgres text rendering cast to ``dt``, checked: malformed text
+    reads NULL, never an error that aborts the batch (the engine-wide fix
+    for the reference's unchecked cast, src/mapping/customMapper.ts:22).
+    ``try_cast`` covers bool 't'/'f', numerics, date and timestamp text;
+    bytea's hex output '\\x...' is unhexed, and a bad hex string (odd
+    length or a non-hex digit) reads NULL."""
+    if isinstance(dt, BinaryType):
+        digits = text.substr(F.lit(3), F.length(text))
+        return F.when(
+            text.startswith("\\x"),
+            F.when(F.length(digits) % 2 == 0, F.unhex(digits)),
+        ).otherwise(text.try_cast(dt))
+    return text.try_cast(dt)
+
+
+def typed_image(row_schema: StructType, text_of) -> Column:
+    """The typed row struct: ``text_of(field)`` is the field's wire text
+    (a Column), or None when the wire has no such column (additive
+    evolution: the field reads NULL)."""
+    fields = []
+    for f in row_schema.fields:
+        text = text_of(f)
+        v = (F.lit(None).cast(f.dataType) if text is None
+             else checked_cast(text, f.dataType))
+        fields.append(v.alias(f.name))
+    return F.struct(*fields)

@@ -37,18 +37,25 @@ Execution model (the two WAL-decode phases, made Spark-shaped):
    (a pushdown-friendly binary substring compare) and decode the
    handful of survivors driver-side. Same sanctioned-metadata class as
    schema-evolution's column discovery.
-2. ``decode_pgoutput`` — the corpus-sized pass: Arrow-batched
-   ``mapInPandas`` over (lsn, payload) rows, each message decoded
-   independently (no cross-row state, so any partitioning works),
-   emitting the SAME envelope frame as the JSON adapters (lsn, tag,
-   new, old) — so filter_control_messages / extract_images /
-   latest_state run UNCHANGED downstream. Text-mode tuple values are
-   converted to the caller's row_schema types inside the decoder
-   (checked: a malformed value becomes NULL, never a corrupt row —
-   the engine-wide fix for the reference's unchecked cast,
-   src/mapping/customMapper.ts:22). Truncated/unknown messages become
-   tag='_corrupt' rows with null images instead of failing the batch
-   (dead-letter discipline, like multimodal quarantine).
+2. ONE row decoder, a single Python byte pass typed on the JVM:
+   - ``decode_pgoutput_generic`` is the only place Python touches the
+     bytes: an Arrow-batched ``mapInPandas`` over (lsn, payload) rows,
+     each message decoded independently (no cross-row state, so any
+     partitioning works) into a schema-agnostic frame — column values
+     as wire text plus one 't'/'n'/'u' kind character per column.
+     Truncated/unknown messages become tag='_corrupt' rows with null
+     images instead of failing the batch (dead-letter discipline, like
+     multimodal quarantine).
+   - typing runs on the JVM inside whole-stage codegen: each schema
+     field is its wire text through ``envelope.checked_cast`` (a
+     malformed value becomes NULL, never a corrupt row — the
+     engine-wide fix for the reference's unchecked cast,
+     src/mapping/customMapper.ts:22).
+   ``decode_pgoutput``, ``decode_pgoutput_v2``, ``decode_pgoutput_2pc``
+   and ``route_table`` are compositions of the two, and emit the SAME
+   envelope frame as the JSON adapters (lsn, tag, new, old) — so
+   filter_control_messages / extract_images / latest_state run
+   UNCHANGED downstream.
 
 ``encode_*`` builders produce byte-exact fixture messages for tests and
 the driver-gated query (real deployments get bytes from the slot); the
@@ -58,21 +65,22 @@ tests/test_cdc.py, so encoder and decoder cannot drift together.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import struct
 from collections.abc import Iterator
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import (
-    DateType,
-    DoubleType,
-    FloatType,
-    IntegerType,
+    ArrayType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .envelope import typed_image
 
 # --- encode (fixture/demo side) ----------------------------------------------
 
@@ -199,6 +207,8 @@ def _read_tuple(buf: bytes, pos: int) -> tuple[list[object], int]:
         elif kind == b"t":
             (ln,) = struct.unpack_from(">i", buf, pos)
             pos += 4
+            if ln < 0 or pos + ln > len(buf):
+                raise ValueError("tuple value overruns the message")
             vals.append(buf[pos:pos + ln].decode())
             pos += ln
         else:
@@ -269,60 +279,13 @@ def discover_relations(messages: DataFrame,
     return out
 
 
-_CASTS = {
-    LongType: int,
-    IntegerType: int,
-    DoubleType: float,
-    FloatType: float,
-    StringType: str,
-}
-
-# Postgres text-format renderings this decoder understands, beyond the
-# numeric/string basics: bool 't'/'f', timestamp 'YYYY-MM-DD HH:MM:SS
-# [.ffffff]', numeric as plain decimal text, bytea hex '\x...'. All
-# checked — malformed text degrades to NULL per the engine-wide
-# checked-cast rule (vs the reference's unchecked cast,
-# src/mapping/customMapper.ts:22).
-_PG_BOOL = {"t": True, "true": True, "f": False, "false": False}
-
-
-def _convert(text: str | None, dt) -> object:
-    if text is None:
-        return None
-    try:
-        if isinstance(dt, DateType):
-            import datetime
-
-            return datetime.date.fromisoformat(text)
-        from pyspark.sql.types import (
-            BinaryType, BooleanType, DecimalType, TimestampType)
-
-        if isinstance(dt, BooleanType):
-            return _PG_BOOL.get(text.lower())
-        if isinstance(dt, TimestampType):
-            import datetime
-
-            return datetime.datetime.fromisoformat(text)
-        if isinstance(dt, DecimalType):
-            import decimal
-
-            return decimal.Decimal(text)
-        if isinstance(dt, BinaryType):
-            if text.startswith("\\x"):
-                return bytes.fromhex(text[2:])
-            return text.encode()
-        caster = _CASTS.get(type(dt))
-        return caster(text) if caster else None
-    except (ValueError, TypeError, ArithmeticError):
-        return None  # checked cast: malformed value -> NULL, never a crash
-
-
 def _parse_change(buf: bytes, image, known_relids=None) -> tuple:
-    """Parse ONE payload into (tag, new, old, unchanged) — the shared
-    per-message core of the v1 and v2 decoders. ``image(relid, vals)``
-    returns (row dict | None, unchanged column names). Any malformed
-    message becomes ('_corrupt', None, None, None): dead-letter, never a
-    failed batch."""
+    """Parse ONE payload into (tag, new, old, unchanged) — the per-message
+    core of the row decoder (decode_pgoutput_generic).
+    ``image(relid, vals)`` returns (image | None, unchanged); ``vals``
+    holds str, None ('n') or UNCHANGED_TOAST ('u') per wire column. Any
+    malformed message becomes ('_corrupt', None, None, None):
+    dead-letter, never a failed batch."""
     try:
         kind = buf[:1]
         if kind == b"B":
@@ -399,6 +362,204 @@ def _parse_change(buf: bytes, image, known_relids=None) -> tuple:
         return ("_corrupt", None, None, None)
 
 
+# --- the one row decoder: a bronze byte pass, typed on the JVM ----------------
+# A replication slot carries EVERY published table, so every decoder in
+# this module is one layering, the lakehouse bronze/silver split:
+#
+#   bronze  decode_pgoutput_generic — ONE Arrow pass turns every message
+#           into a schema-agnostic envelope (lsn, relid, xid, top_xid, tag,
+#           per-column wire text + a kind string of one 't'/'n'/'u' per
+#           column). Python touches the bytes exactly once for the whole
+#           slot; persist/land this frame and every table routes from it.
+#   silver  _typed_columns — pure JVM: envelope.checked_cast per schema
+#           field inside whole-stage codegen (malformed text -> NULL),
+#           kind 'u' surfaces as the unchanged-TOAST name list, 'n' stays
+#           SQL NULL. decode_pgoutput / _v2 / _2pc type every known
+#           relation; route_table types ONE (N tables = N filters over the
+#           SAME bronze scan, zero additional decode work).
+
+# protocol v2 stream control frames (see the v2 section below)
+_STREAM_CTRL = {b"S": "stream_start", b"E": "stream_stop",
+                b"c": "stream_commit", b"A": "stream_abort"}
+# Protocol v2 xid-prefixes EVERY in-segment frame, not just DML:
+# logical-decoding Message ('M') and Type ('Y') frames inside S..E
+# segments carry the Int32 xid too (this module's own
+# encode_logical_message emits it for 'M', and
+# decode_logical_messages(streamed=True) strips it). Without b"M" here
+# the flags byte _parse_change reads at buf[1] is the xid's high byte,
+# mis-tagging in-segment TRANSACTIONAL messages as message_nontxn for
+# almost every xid; without b"Y" a streamed type row decodes with
+# xid=None, so a subtransaction abort cannot match and discard it.
+_XID_PREFIXED = (b"I", b"U", b"D", b"R", b"T", b"M", b"Y")
+# the segment xid decode_pgoutput_v2's range join puts on each message
+_SEG_XID = "__seg_xid"
+
+_BRONZE_SCHEMA = StructType([
+    StructField("lsn", LongType()),
+    StructField("relid", LongType()),
+    StructField("xid", LongType()),
+    StructField("top_xid", LongType()),
+    StructField("tag", StringType()),
+    StructField("vals", ArrayType(StringType())),
+    StructField("kinds", StringType()),
+    StructField("old_vals", ArrayType(StringType())),
+    StructField("old_kinds", StringType()),
+])
+
+
+def _bronze_image(known: frozenset, relid: int, vals: list) -> tuple:
+    """_parse_change's ``image`` for the bronze frame: ((wire text per
+    column, kind string), None), or (None, None) for an unknown relid."""
+    if relid not in known:
+        return None, None
+    texts = [v if type(v) is str else None for v in vals]
+    kinds = "".join(["t" if type(v) is str else "n" if v is None else "u"
+                     for v in vals])
+    return (texts, kinds), None
+
+
+def _bronze_row(lsn: int, buf: bytes, top: int | None, streamed: bool,
+                image, known: frozenset) -> tuple:
+    """One message -> one bronze row. ``streamed`` (a v2 capture) tags
+    the S/E/c/A control frames; ``top`` is the enclosing segment's xid,
+    and inside a segment the Int32 xid prefix is stripped first."""
+    kind = buf[:1]
+    xid = None
+    if streamed:
+        ctrl = _STREAM_CTRL.get(kind)
+        if ctrl is not None:
+            return (lsn, None, None, None, ctrl, None, None, None, None)
+        if top is not None and kind in _XID_PREFIXED:
+            if len(buf) < 5:
+                return (lsn, None, None, None, "_corrupt",
+                        None, None, None, None)
+            (xid,) = struct.unpack_from(">i", buf, 1)
+            buf = kind + buf[5:]
+    relid = None
+    if kind in (b"I", b"U", b"D") and len(buf) >= 5:
+        (relid,) = struct.unpack_from(">i", buf, 1)
+    tag, new, old, _ = _parse_change(buf, image, known)
+    vals, kinds = new if new is not None else (None, None)
+    old_vals, old_kinds = old if old is not None else (None, None)
+    return (lsn, relid, xid, top, tag, vals, kinds, old_vals, old_kinds)
+
+
+def decode_pgoutput_generic(
+    messages: DataFrame,
+    relations: dict[int, list[str]] | None = None,
+    lsn_col: str = "lsn",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """Bronze envelope, the one Python pass: (lsn long, relid, xid,
+    top_xid, tag, vals, kinds, old_vals, old_kinds) — values as wire
+    text in wire column order, ``kinds`` one 't'/'n'/'u' character per
+    column. Unknown relids keep their rows (relid is there, vals NULL)
+    so a late-registered table is a re-route, not a re-capture.
+
+    A frame carrying decode_pgoutput_v2's segment column is a v2
+    capture: S/E/c/A frames get their stream tags, and a row inside a
+    segment has its Int32 xid prefix stripped into ``xid`` with the
+    segment's xid as ``top_xid``. Otherwise both read NULL."""
+    if relations is None:
+        relations = discover_relations(messages, payload_col, lsn_col)
+    known = frozenset(relations)
+    image = functools.partial(_bronze_image, known)
+    streamed = _SEG_XID in messages.columns
+    cols = [f.name for f in _BRONZE_SCHEMA.fields]
+
+    def decode(batches) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            tops = ((None if pd.isna(t) else int(t)) for t in pdf[_SEG_XID]) \
+                if streamed else itertools.repeat(None)
+            rows = [
+                _bronze_row(int(lsn), bytes(payload), top, streamed,
+                            image, known)
+                for lsn, payload, top in zip(pdf[lsn_col], pdf[payload_col],
+                                             tops)
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    inputs = [lsn_col, payload_col] + ([_SEG_XID] if streamed else [])
+    return messages.select(*inputs).mapInPandas(decode, schema=_BRONZE_SCHEMA)
+
+
+def _wire_positions(relations: dict[int, list[str]],
+                    row_schema: StructType) -> dict[str, Column | None]:
+    """Per schema field, its 1-based position in the bronze ``vals``: a
+    literal when every relation has it in the same place, else looked up
+    by relid; None when no relation carries it. A name repeated on the
+    wire resolves to its last position."""
+    where = {r: {n: i + 1 for i, n in enumerate(names)}
+             for r, names in relations.items()}
+    out: dict[str, Column | None] = {}
+    for f in row_schema.fields:
+        at = {r: idx[f.name] for r, idx in where.items() if f.name in idx}
+        if not at:
+            out[f.name] = None
+        elif len(at) == len(where) and len(set(at.values())) == 1:
+            out[f.name] = F.lit(next(iter(at.values())))
+        else:
+            out[f.name] = F.try_element_at(
+                F.create_map(*[F.lit(x) for kv in at.items() for x in kv]),
+                F.col("relid"))
+    return out
+
+
+def _typed_columns(row_schema: StructType, relations: dict[int, list[str]],
+                   track_unchanged: bool) -> list[Column]:
+    """(tag, new, old [, unchanged]) over a bronze frame, typed on the
+    JVM. An image reads NULL for a control row or an unknown relid; a
+    field reads its wire text through envelope.checked_cast (the bronze
+    text is NULL for kinds 'n' and 'u'), or NULL for a column absent on
+    the wire. ``unchanged`` lists, in schema order, the fields of an
+    insert/update image whose kind is 'u' (empty for an unknown relid)."""
+    pos = _wire_positions(relations, row_schema)
+
+    def image(vals: str, kinds: str) -> Column:
+        def text_of(f):
+            p = pos[f.name]
+            return None if p is None else F.try_element_at(F.col(vals), p)
+
+        return F.when(F.col(kinds).isNotNull(),
+                      typed_image(row_schema, text_of))
+
+    cols = [F.col("tag"), image("vals", "kinds").alias("new"),
+            image("old_vals", "old_kinds").alias("old")]
+    if track_unchanged:
+        names = F.array(*[F.when(F.substring("kinds", p, 1) == "u", F.lit(n))
+                          for n, p in pos.items() if p is not None])
+        cols.append(F.when(
+            F.col("tag").isin("insert", "update"),
+            F.array_compact(names.cast(ArrayType(StringType()))),
+        ).alias("unchanged"))
+    return cols
+
+
+def _v1_lsn(lsn: Column) -> Column:
+    # '0/%016X': zero-padded so STRING order == WAL order (the envelope
+    # convention cdc_evolving_state also relies on)
+    return F.concat(F.lit("0/"), F.lpad(F.hex(lsn), 16, "0"))
+
+
+def route_table(
+    generic: DataFrame,
+    relid: int,
+    col_names: list[str],
+    row_schema: StructType,
+    track_unchanged: bool = False,
+) -> DataFrame:
+    """Silver routing: the typed envelope for ONE table, built entirely
+    JVM-side from the bronze frame — the same typing as
+    decode_pgoutput, no Python. Output matches decode_pgoutput's frame
+    (lsn, tag, new, old [, unchanged]), so the standard pipeline and
+    toast_state run unchanged."""
+    return generic.filter(F.col("relid") == relid).select(
+        _v1_lsn(F.col("lsn")).alias("lsn"),
+        *_typed_columns(row_schema, {relid: col_names}, track_unchanged))
+
+
 def decode_pgoutput(
     messages: DataFrame,
     row_schema: StructType,
@@ -425,58 +586,10 @@ def decode_pgoutput(
     the historical frame."""
     if relations is None:
         relations = discover_relations(messages, payload_col, lsn_col)
-    fields = [(f.name, f.dataType) for f in row_schema.fields]
-    out_fields = [
-        StructField("lsn", StringType()),
-        StructField("tag", StringType()),
-        StructField("new", row_schema),
-        StructField("old", row_schema),
-    ]
-    if track_unchanged:
-        from pyspark.sql.types import ArrayType
-
-        out_fields.append(StructField("unchanged", ArrayType(StringType())))
-    out_schema = StructType(out_fields)
-
-    def _image(relid: int, vals: list[object]) -> tuple[dict | None, list[str]]:
-        names = relations.get(relid)
-        if names is None:
-            return None, []
-        wire = dict(zip(names, vals))
-        img, unchanged = {}, []
-        for n, dt in fields:
-            v = wire.get(n)
-            if isinstance(v, _UnchangedToast):
-                img[n] = None
-                unchanged.append(n)
-            else:
-                img[n] = _convert(v, dt)
-        return img, unchanged
-
-    known = frozenset(relations)
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        cols = ["lsn", "tag", "new", "old"]
-        if track_unchanged:
-            cols = cols + ["unchanged"]
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload in zip(pdf[lsn_col], pdf[payload_col]):
-                # zero-padded so STRING order == WAL order (the envelope
-                # convention cdc_evolving_state also relies on)
-                lsn_s = f"0/{int(lsn):016X}"
-                tag, new, old, unch = _parse_change(
-                    bytes(payload), _image, known)
-                row = (lsn_s, tag, new, old)
-                if track_unchanged:
-                    row = row + (unch,)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return messages.mapInPandas(decode, schema=out_schema)
+    bronze = decode_pgoutput_generic(messages, relations, lsn_col, payload_col)
+    return bronze.select(
+        _v1_lsn(F.col("lsn")).alias("lsn"),
+        *_typed_columns(row_schema, relations, track_unchanged))
 
 
 # --- protocol v2: streamed in-progress transactions ---------------------------
@@ -504,8 +617,9 @@ def decode_pgoutput(
 #      join: the engine's own binned_range_join (equi-join on lsn bins,
 #      never a nested loop), left-outer so non-streamed traffic passes
 #      through.
-#   3. decode            — the same stateless Arrow pass as v1, stripping
-#      the 4 xid bytes when (and only when) the row is inside a segment.
+#   3. decode            — the one bronze pass (decode_pgoutput_generic),
+#      stripping the 4 xid bytes when (and only when) the row is inside
+#      a segment, typed on the JVM like v1.
 #   4. stream_verdicts + apply_stream_transactions — 'c'/'A' rows are
 #      O(#transactions); a broadcast join stamps each streamed row with
 #      its commit lsn (the APPLY position) or drops it (abort/in-flight).
@@ -631,7 +745,7 @@ def decode_pgoutput_v2(
     values. Stream membership comes from the
     binned interval join against ``stream_segments`` (equi-join on lsn
     bins — operators/rangejoin.py — never a nested loop); inside a
-    segment the Int32 xid is stripped before the shared v1 parse.
+    segment the one bronze pass strips the Int32 xid before the parse.
     Auto-discovery of ``relations`` handles streamed 'R' messages too:
     an 'R' whose lsn falls inside a segment has its 4 xid bytes
     stripped before the driver-side decode (segments are collected
@@ -684,93 +798,11 @@ def decode_pgoutput_v2(
                         F.col(payload_col).alias("__payload")),
         segments,
         "__lsn", "seg_start", "seg_stop", bin_width, how="left_outer",
-    ).select("__lsn", "__payload", F.col("seg_xid").alias("__seg_xid"))
-
-    fields = [(f.name, f.dataType) for f in row_schema.fields]
-    out_fields = [
-        StructField("lsn", LongType()),
-        StructField("xid", LongType()),
-        StructField("top_xid", LongType()),
-        StructField("tag", StringType()),
-        StructField("new", row_schema),
-        StructField("old", row_schema),
-    ]
-    if track_unchanged:
-        from pyspark.sql.types import ArrayType
-
-        out_fields.append(StructField("unchanged", ArrayType(StringType())))
-    out_schema = StructType(out_fields)
-
-    def _image(relid: int, vals: list[object]) -> tuple[dict | None, list[str]]:
-        names = relations.get(relid)
-        if names is None:
-            return None, []
-        wire = dict(zip(names, vals))
-        img, unchanged = {}, []
-        for n, dt in fields:
-            v = wire.get(n)
-            if isinstance(v, _UnchangedToast):
-                img[n] = None
-                unchanged.append(n)
-            else:
-                img[n] = _convert(v, dt)
-        return img, unchanged
-
-    _CTRL = {b"S": "stream_start", b"E": "stream_stop",
-             b"c": "stream_commit", b"A": "stream_abort"}
-    known = frozenset(relations)
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        cols = ["lsn", "xid", "top_xid", "tag", "new", "old"]
-        if track_unchanged:
-            cols = cols + ["unchanged"]
-
-        def emit(rows, lsn, xid, top, tag, new=None, old=None, unch=None):
-            row = (int(lsn), xid, top, tag, new, old)
-            if track_unchanged:
-                row = row + (unch,)
-            rows.append(row)
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload, seg_xid in zip(
-                pdf["__lsn"], pdf["__payload"], pdf["__seg_xid"]
-            ):
-                buf = bytes(payload)
-                in_stream = seg_xid is not None and not pd.isna(seg_xid)
-                top = int(seg_xid) if in_stream else None
-                kind = buf[:1]
-                ctrl = _CTRL.get(kind)
-                if ctrl is not None:
-                    emit(rows, lsn, None, None, ctrl)
-                    continue
-                xid = None
-                # Protocol v2 xid-prefixes EVERY in-segment frame, not
-                # just DML: logical-decoding Message ('M') and Type
-                # ('Y') frames inside S..E segments carry the Int32 xid
-                # too (this module's own encode_logical_message emits it
-                # for 'M', and decode_logical_messages(streamed=True)
-                # strips it). Without b"M" here the flags byte
-                # _parse_change reads at buf[1] is the xid's high byte,
-                # mis-tagging in-segment TRANSACTIONAL messages as
-                # message_nontxn for almost every xid; without b"Y" a
-                # streamed type row decodes with xid=None, so a
-                # subtransaction abort cannot match and discard it.
-                if in_stream and kind in (b"I", b"U", b"D", b"R", b"T",
-                                          b"M", b"Y"):
-                    try:
-                        (xid,) = struct.unpack_from(">i", buf, 1)
-                        buf = buf[:1] + buf[5:]
-                    except struct.error:
-                        emit(rows, lsn, None, None, "_corrupt")
-                        continue
-                tag, new, old, unch = _parse_change(buf, _image, known)
-                emit(rows, lsn, xid, top, tag, new, old, unch)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tagged.mapInPandas(decode, schema=out_schema)
+    ).select("__lsn", "__payload", F.col("seg_xid").alias(_SEG_XID))
+    bronze = decode_pgoutput_generic(tagged, relations, "__lsn", "__payload")
+    return bronze.select(
+        "lsn", "xid", "top_xid",
+        *_typed_columns(row_schema, relations, track_unchanged))
 
 
 def apply_stream_transactions(decoded: DataFrame,
@@ -823,150 +855,6 @@ def apply_stream_transactions(decoded: DataFrame,
     if "unchanged" in decoded.columns:
         cols.append("unchanged")  # TOAST markers ride through to toast_state
     return joined.filter(keep).select(*cols)
-
-
-# --- multi-table capture: generic (bronze) decode + JVM-typed routing ---------
-# A replication slot carries EVERY published table; decoding straight to
-# one typed schema (decode_pgoutput) forces one scan per table. The
-# scalable layering is the lakehouse bronze/silver split:
-#
-#   bronze  decode_pgoutput_generic — ONE Arrow pass turns every message
-#           into a schema-agnostic envelope (lsn, relid, tag, per-column
-#           text values + wire kinds). Python touches the bytes exactly
-#           once for the whole slot; persist/land this frame and every
-#           table routes from it.
-#   silver  route_table — pure JVM: element_at + try_cast build the typed
-#           image inside whole-stage codegen (checked casts: malformed
-#           text -> NULL, the same engine-wide rule), wire kind 'u'
-#           surfaces as the unchanged-TOAST name list, 'n' stays SQL
-#           NULL. N tables = N filters over the SAME bronze scan, zero
-#           additional decode work.
-
-
-def decode_pgoutput_generic(
-    messages: DataFrame,
-    relations: dict[int, list[str]] | None = None,
-    lsn_col: str = "lsn",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Bronze envelope: (lsn, relid, tag, vals, kinds, old_vals,
-    old_kinds) — values as wire text, kinds as 't'/'n'/'u' per column.
-    Unknown relids keep their rows (relid is there, vals NULL) so a
-    late-registered table is a re-route, not a re-capture."""
-    from pyspark.sql.types import ArrayType
-
-    if relations is None:
-        relations = discover_relations(messages, payload_col, lsn_col)
-    known = frozenset(relations)
-    arr = ArrayType(StringType())
-    out_schema = StructType([
-        StructField("lsn", StringType()),
-        StructField("relid", LongType()),
-        StructField("tag", StringType()),
-        StructField("vals", arr),
-        StructField("kinds", arr),
-        StructField("old_vals", arr),
-        StructField("old_kinds", arr),
-    ])
-
-    def split(vals):
-        if vals is None:
-            return None, None
-        out_v, out_k = [], []
-        for v in vals:
-            if isinstance(v, _UnchangedToast):
-                out_v.append(None)
-                out_k.append("u")
-            elif v is None:
-                out_v.append(None)
-                out_k.append("n")
-            else:
-                out_v.append(v)
-                out_k.append("t")
-        return out_v, out_k
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for lsn, payload in zip(pdf[lsn_col], pdf[payload_col]):
-                buf = bytes(payload)
-                lsn_s = f"0/{int(lsn):016X}"
-                relid = None
-                try:
-                    kind = buf[:1]
-                    if kind in (b"I", b"U", b"D"):
-                        (relid,) = struct.unpack_from(">i", buf, 1)
-                except (struct.error, IndexError):
-                    pass
-
-                def raw_image(rid, tuple_vals):
-                    # generic: keep the WIRE order, no schema projection
-                    return tuple_vals if rid in known else None
-
-                tag, new, old, _ = _parse_change(
-                    buf, lambda rid, tv: (raw_image(rid, tv), []), known)
-                nv, nk = split(new)
-                ov, ok = split(old)
-                rows.append((lsn_s, relid, tag, nv, nk, ov, ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["lsn", "relid", "tag", "vals", "kinds",
-                         "old_vals", "old_kinds"],
-            )
-
-    return messages.mapInPandas(decode, schema=out_schema)
-
-
-def route_table(
-    generic: DataFrame,
-    relid: int,
-    col_names: list[str],
-    row_schema: StructType,
-    track_unchanged: bool = False,
-) -> DataFrame:
-    """Silver routing: the typed envelope for ONE table, built entirely
-    JVM-side from the bronze frame — element_at + try_cast inside
-    codegen, no Python. Output matches decode_pgoutput's frame (lsn,
-    tag, new, old [, unchanged]), so the standard pipeline and
-    toast_state run unchanged."""
-    g = generic.filter(F.col("relid") == relid)
-
-    def typed(vals_c, kinds_c):
-        fields = []
-        for f in row_schema.fields:
-            if f.name in col_names:
-                i = col_names.index(f.name) + 1  # element_at is 1-based
-                v = F.when(
-                    F.element_at(kinds_c, i) == "t",
-                    F.element_at(vals_c, i).try_cast(f.dataType),
-                )
-            else:  # additive evolution: schema column absent on the wire
-                v = F.lit(None).cast(f.dataType)
-            fields.append(v.alias(f.name))
-        return F.struct(*fields)
-
-    new = F.when(F.col("kinds").isNotNull(),
-                 typed(F.col("vals"), F.col("kinds")))
-    old = F.when(F.col("old_kinds").isNotNull(),
-                 typed(F.col("old_vals"), F.col("old_kinds")))
-    cols = [F.col("lsn"), F.col("tag"), new.alias("new"), old.alias("old")]
-    if track_unchanged:
-        names_lit = F.array(*[F.lit(c) for c in col_names])
-        cols.append(
-            F.when(
-                F.col("kinds").isNotNull(),
-                F.filter(
-                    F.zip_with(
-                        F.col("kinds"), names_lit,
-                        lambda k, n: F.when(k == "u", n),
-                    ),
-                    lambda x: x.isNotNull(),
-                ),
-            ).alias("unchanged")
-        )
-    return g.select(*cols)
 
 
 # --- protocol v3: two-phase commit (PREPARE TRANSACTION) -----------------------
@@ -1142,29 +1030,27 @@ def decode_pgoutput_2pc(
 
     if spans is None:
         spans = prepared_spans(messages, lsn_col, payload_col)
-    env = decode_pgoutput(
-        messages, row_schema, relations=relations,
-        lsn_col=lsn_col, payload_col=payload_col,
-        track_unchanged=track_unchanged,
-    ).withColumn(
-        "__ord", F.conv(F.expr("substring(lsn, 3, 16)"), 16, 10).cast("long")
-    )
+    if relations is None:
+        relations = discover_relations(messages, payload_col, lsn_col)
+    env = decode_pgoutput_generic(
+        messages, relations, lsn_col, payload_col,
+    ).select("lsn", *_typed_columns(row_schema, relations, track_unchanged))
     tagged = binned_range_join(
-        env.drop("lsn"),
+        env,
         # bounded: O(#prepared transactions) control spans
         F.broadcast(spans),
-        "__ord", "p_start", "p_stop", bin_width, how="left_outer",
+        "lsn", "p_start", "p_stop", bin_width, how="left_outer",
     )
     stamp = F.when(F.col("tag").isin(*_PREPARED_STAMP_TAGS),
                    F.col("p_xid"))
     cols = [
-        F.col("__ord").alias("lsn"),
+        "lsn",
         stamp.alias("xid"),
         stamp.alias("top_xid"),
         "tag", "new", "old",
     ]
     if track_unchanged:
-        cols.append(F.col("unchanged"))
+        cols.append("unchanged")
     return tagged.select(*cols)
 
 
@@ -1391,8 +1277,8 @@ def unwrap_xlogdata(frames: DataFrame,
 # decode library's JS objects; here it is explicit). Inference is part
 # of the same bounded O(#tables) metadata pass as name discovery.
 
-#: pg_type OID -> Spark type for the text-mode renderings _convert
-#: understands. NUMERIC maps to DecimalType(38,18) — exact, and wide
+#: pg_type OID -> Spark type for the text-mode renderings
+#: envelope.checked_cast understands. NUMERIC maps to DecimalType(38,18) — exact, and wide
 #: enough for any fixture; unknown OIDs fall back to StringType (the
 #: wire value is text already, so nothing is lost — a consumer can
 #: try_cast later).

@@ -143,12 +143,19 @@ def extract_images(df: DataFrame) -> DataFrame:
         .when(F.col("tag") == "update", "U")
         .when(F.col("tag") == "delete", "D")
     )
-    image = F.when(F.col("tag") == "delete", F.col("old")).otherwise(F.col("new"))
+    is_del = F.col("tag") == "delete"
+    image = F.when(is_del, F.col("old")).otherwise(F.col("new"))
+    # the null test per branch, not on ``image``: pushed below a decoder's
+    # projection, a test of the branch picked lets Catalyst reduce
+    # isnotnull(CASE WHEN c THEN struct(...) END) to c instead of typing
+    # the image twice (once to test it, once to emit it)
+    has_image = F.when(is_del, F.col("old").isNotNull()).otherwise(
+        F.col("new").isNotNull())
     return (
         df.withColumn("op", op)
         .filter(F.col("op").isNotNull())
+        .filter(has_image)
         .withColumn("image", image)
-        .filter(F.col("image").isNotNull())
     )
 
 

@@ -125,7 +125,9 @@ def toast_state(
     Postgres does not re-send a TOASTed value an UPDATE didn't touch
     (pgoutput TupleData kind 'u'); the decoded image reads NULL there
     with the column name listed in ``unchanged_col`` (see
-    pgoutput.decode_pgoutput(track_unchanged=True)). A plain upsert of
+    pgoutput.decode_pgoutput(track_unchanged=True); the v2/2PC decoders
+    and route_table build the same column with the same JVM typing,
+    from the 'u' kinds of the one bronze pass). A plain upsert of
     such images silently overwrites stored values with NULL — the
     classic TOAST data-loss bug (the reference inherits it: its mapper
     forwards wal2json images verbatim, src/mapping/customMapper.ts:19-23,

@@ -21,11 +21,12 @@ values are TYPED JSON (numbers unquoted, SQL NULL as JSON null), with
 the old key under ``identity``.
 
 Both parsers normalize entirely with JVM built-ins — from_json,
-posexplode for the v1 ordinal, map_from_arrays for name->value, and
-per-field try_cast for the CHECKED text->type conversion (malformed
-text becomes NULL, never an ANSI cast error aborting the batch — the
-same contract as the pgoutput decoder and the engine-wide fix for the
-reference's unchecked cast, src/mapping/customMapper.ts:22). Output is
+posexplode for the v1 ordinal, map_from_arrays for name->value
+(projected once per image), and per-field envelope.checked_cast for the
+CHECKED text->type conversion (malformed text becomes NULL, never an
+ANSI cast error aborting the batch — the same helper the pgoutput
+decoder types with, and the engine-wide fix for the reference's
+unchecked cast, src/mapping/customMapper.ts:22). Output is
 the standard envelope frame (lsn, tag, new, old) with the pg_lsn 'X/Y'
 hex halves each zero-padded to a fixed width (v1 appends the change
 ordinal) so the unchanged filter -> extract -> upsert pipeline gets a
@@ -44,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .envelope import typed_image
 
 _CHANGE = StructType(
     [
@@ -94,15 +97,11 @@ def _sortable_lsn(lsn: F.Column) -> F.Column:
     )
 
 
-def _typed_image(map_col: F.Column, row_schema: StructType) -> F.Column:
-    """name->text map folded into the caller's typed struct, one
-    try_cast per field (checked: bad text -> NULL field)."""
-    return F.struct(
-        *[
-            F.element_at(map_col, f.name).try_cast(f.dataType).alias(f.name)
-            for f in row_schema.fields
-        ]
-    )
+def _typed_image(name_map: str, row_schema: StructType) -> F.Column:
+    """A projected name->text map column folded into the caller's typed
+    struct, one checked cast per field (bad text -> NULL field)."""
+    m = F.col(name_map)
+    return typed_image(row_schema, lambda f: F.element_at(m, f.name))
 
 
 def parse_wal2json(
@@ -148,11 +147,19 @@ def parse_wal2json(
             | ~kind.isin("insert", "update", "delete")
             | is_mine
         )
-    new_map = F.map_from_arrays("_ch.columnnames", "_ch.columnvalues")
-    old_map = F.map_from_arrays("_ch.oldkeys.keynames", "_ch.oldkeys.keyvalues")
-    is_del = F.col("_ch.kind") == "delete"
-    has_new = F.col("_ch.columnnames").isNotNull()
+    has_new = (F.col("_ch.kind") != "delete") \
+        & F.col("_ch.columnnames").isNotNull()
     has_old = F.col("_ch.oldkeys").isNotNull()
+    # each image's name->text map is projected ONCE, before its struct
+    # reads every schema field out of it
+    ch = ch.select(
+        "_txn_lsn", "_idx", "_ch.kind", "_ch.columnnames",
+        has_new.alias("_has_new"), has_old.alias("_has_old"),
+        F.when(has_new, F.map_from_arrays(
+            "_ch.columnnames", "_ch.columnvalues")).alias("_new"),
+        F.when(has_old, F.map_from_arrays(
+            "_ch.oldkeys.keynames", "_ch.oldkeys.keyvalues")).alias("_old"),
+    )
     # hex-half padding shared with the v2 parser (_sortable_lsn); v1
     # appends the change ordinal for intra-transaction order
     return ch.select(
@@ -166,23 +173,23 @@ def parse_wal2json(
                 F.create_map(
                     *[F.lit(x) for kv in _KIND_TO_TAG.items() for x in kv]
                 ),
-                F.col("_ch.kind"),
+                F.col("kind"),
             ),
             F.lit("_control"),
         ).alias("tag"),
-        F.when(~is_del & has_new, _typed_image(new_map, row_schema)).alias("new"),
+        F.when(F.col("_has_new"), _typed_image("_new", row_schema)).alias("new"),
         # oldkeys ride DELETEs *and* key-changing UPDATEs (wal2json emits
         # them whenever the replica identity changed) — surfacing both is
         # what lets transform.split_key_updates retire the old key
-        F.when(has_old, _typed_image(old_map, row_schema)).alias("old"),
+        F.when(F.col("_has_old"), _typed_image("_old", row_schema)).alias("old"),
         *(
             [
                 F.when(
-                    ~is_del & has_new,
+                    F.col("_has_new"),
                     F.filter(
                         F.array(*[F.lit(f.name) for f in row_schema.fields]),
                         lambda n: ~F.array_contains(
-                            F.col("_ch.columnnames"), n
+                            F.col("columnnames"), n
                         ),
                     ),
                 ).alias("unchanged")
@@ -233,14 +240,13 @@ _V2_ACTION_TO_TAG = {
 }
 
 
-def _v2_image(cols: F.Column, row_schema: StructType) -> F.Column:
-    """column-object array -> the caller's typed struct: name->value map
-    (map_from_arrays over two transforms), one try_cast per field."""
-    m = F.map_from_arrays(
+def _v2_map(cols: F.Column) -> F.Column:
+    """column-object array -> its name->value map (map_from_arrays over
+    two transforms)."""
+    return F.map_from_arrays(
         F.transform(cols, lambda c: c["name"]),
         F.transform(cols, lambda c: c["value"]),
     )
-    return _typed_image(m, row_schema)
 
 
 def parse_wal2json_v2(
@@ -271,7 +277,7 @@ def parse_wal2json_v2(
     and a 'T' frame naming a DIFFERENT table tags ``truncate_other``
     (inert to drop_pre_truncate) instead of voiding this table's rows.
     (Multi-table fan-out belongs to the routing operator,
-    cdc/pgoutput.decode_pgoutput_multi — one stream per silver table is
+    cdc/pgoutput.decode_pgoutput_generic + route_table — one stream per silver table is
     the serving shape here.)
 
     TOAST: like v1, an unchanged-TOAST column is OMITTED from the
@@ -311,22 +317,28 @@ def parse_wal2json_v2(
             (act == "T") & ~is_mine, F.lit("truncate_other")
         ).otherwise(tag)
     has_new = act.isin("I", "U") & F.col("_d.columns").isNotNull()
-    has_old = F.col("_d.identity").isNotNull()
-    col_names = F.transform(F.col("_d.columns"), lambda c: c["name"])
-    return doc.select(
+    has_old = is_data & F.col("_d.identity").isNotNull()
+    # each image's name->value map is projected ONCE, before its struct
+    # reads every schema field out of it
+    doc = doc.select(
         _sortable_lsn(F.col("_d.lsn")).alias("lsn"),
         tag.alias("tag"),
-        F.when(has_new, _v2_image(F.col("_d.columns"), row_schema)).alias("new"),
-        F.when(
-            is_data & has_old, _v2_image(F.col("_d.identity"), row_schema)
-        ).alias("old"),
+        F.when(has_new, _v2_map(F.col("_d.columns"))).alias("_new"),
+        F.when(has_old, _v2_map(F.col("_d.identity"))).alias("_old"),
+    )
+    has_new = F.col("_new").isNotNull()
+    return doc.select(
+        "lsn", "tag",
+        F.when(has_new, _typed_image("_new", row_schema)).alias("new"),
+        F.when(F.col("_old").isNotNull(),
+               _typed_image("_old", row_schema)).alias("old"),
         *(
             [
                 F.when(
                     has_new,
                     F.filter(
                         F.array(*[F.lit(f.name) for f in row_schema.fields]),
-                        lambda n: ~F.array_contains(col_names, n),
+                        lambda n: ~F.array_contains(F.map_keys("_new"), n),
                     ),
                 ).alias("unchanged")
             ]

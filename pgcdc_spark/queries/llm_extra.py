@@ -34,6 +34,7 @@ comparisons see bit-identical doubles.
 from __future__ import annotations
 
 import os
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -893,6 +894,7 @@ def _corpus_fingerprint(sf_dir: str) -> str:
 
 
 _ANN_SESSION_ROOT: str | None = None
+_ANN_SESSION_LOCK = threading.Lock()
 
 
 def _ann_session_root() -> str:
@@ -901,16 +903,18 @@ def _ann_session_root() -> str:
     once and every probe reuses it (the serving semantics the probe
     family declares), but nothing survives the process, so a bench run
     can never inherit an index built by an earlier run (r13 verdict
-    item 1 — the ANN twin of bench.py's PGCDC_IVM_CACHE=0)."""
+    item 1 — the ANN twin of bench.py's PGCDC_IVM_CACHE=0). The lazy
+    init holds a lock, so concurrent first callers share one root."""
     global _ANN_SESSION_ROOT
-    if _ANN_SESSION_ROOT is None:
-        import atexit
-        import shutil
-        import tempfile
+    with _ANN_SESSION_LOCK:
+        if _ANN_SESSION_ROOT is None:
+            import atexit
+            import shutil
+            import tempfile
 
-        _ANN_SESSION_ROOT = tempfile.mkdtemp(prefix="pgcdc-ann-session-")
-        atexit.register(shutil.rmtree, _ANN_SESSION_ROOT, True)
-    return _ANN_SESSION_ROOT
+            _ANN_SESSION_ROOT = tempfile.mkdtemp(prefix="pgcdc-ann-session-")
+            atexit.register(shutil.rmtree, _ANN_SESSION_ROOT, True)
+        return _ANN_SESSION_ROOT
 
 
 def _ann_root(sf_dir: str, kind: str) -> str:
@@ -945,9 +949,11 @@ def _ann_root(sf_dir: str, kind: str) -> str:
 def _ann_index_for(spark: SparkSession, sf_dir: str):
     """The cached on-disk index for this corpus (build on first touch).
     Keyed by the corpus FINGERPRINT under the system temp root: the
-    build is deterministic, so reuse across sessions is safe, and a
-    regenerated corpus at the same path gets a fresh key (no stale
-    serving); _ANN_FORMAT guards layout changes."""
+    build is deterministic, and a regenerated corpus at the same path
+    gets a fresh key (no stale serving); _ANN_FORMAT guards layout
+    changes. Reuse across sessions holds only while ``PGCDC_ANN_CACHE``
+    is not ``0``; with ``PGCDC_ANN_CACHE=0`` the root is scoped to this
+    process (_ann_session_root), so each session builds its own."""
     from ..operators.annindex import AnnIndex
 
     idx = AnnIndex(_ann_root(sf_dir, "full"))

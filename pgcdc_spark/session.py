@@ -45,10 +45,13 @@ RUNTIME_CONF: dict[str, str] = {
 
 
 def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when it is a positive integer, else every CPU
+    of this machine."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        n = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        n = 0
+    return n if n > 0 else os.cpu_count() or 1
 
 
 def get_spark(

@@ -606,9 +606,11 @@ def test_wal2json_v2_edges_checked(spark):
     deletes AND key-changing updates (old key surfaced for
     split_key_updates); hex lsn halves sort in WAL order across digit-
     count changes and lowercase renderings; omitted columns surface via
-    track_unchanged while JSON null stays a genuine SQL NULL."""
+    track_unchanged while JSON null stays a genuine SQL NULL; bytea hex
+    text '\\x...' unhexes, and bad hex reads NULL."""
     from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType)
+        BinaryType, DoubleType, LongType, StringType, StructField,
+        StructType)
 
     from pgcdc_spark.cdc.transform import apply_pipeline, split_key_updates
     from pgcdc_spark.cdc.wal2json import parse_wal2json_v2
@@ -618,16 +620,19 @@ def test_wal2json_v2_edges_checked(spark):
         '{"action":"I","schema":"s","table":"t","lsn":"0/a","columns":['
         '{"name":"id","type":"bigint","value":1},'
         '{"name":"v","type":"double precision","value":1.5},'
-        '{"name":"s","type":"text","value":"x"}]}',
+        '{"name":"s","type":"text","value":"x"},'
+        '{"name":"b","type":"bytea","value":"\\\\x0aff"}]}',
         # digit-count rollover: 0x10 > 0xF must hold after padding
         '{"action":"U","schema":"s","table":"t","lsn":"0/F","columns":['
         '{"name":"id","type":"bigint","value":1},'
         '{"name":"v","type":"double precision","value":"oops"},'
-        '{"name":"s","type":"text","value":null}]}',
+        '{"name":"s","type":"text","value":null},'
+        '{"name":"b","type":"bytea","value":"\\\\xzz"}]}',
         # key-changing update: identity carries the OLD key
         '{"action":"U","schema":"s","table":"t","lsn":"0/10","columns":['
         '{"name":"id","type":"bigint","value":2},'
-        '{"name":"v","type":"double precision","value":3.25}],'
+        '{"name":"v","type":"double precision","value":3.25},'
+        '{"name":"b","type":"bytea","value":"\\\\x"}],'
         '"identity":[{"name":"id","type":"bigint","value":1}]}',
         '{"action":"D","schema":"s","table":"t","lsn":"0/11",'
         '"identity":[{"name":"id","type":"bigint","value":2}]}',
@@ -637,7 +642,8 @@ def test_wal2json_v2_edges_checked(spark):
     ]
     schema = StructType([StructField("id", LongType()),
                          StructField("v", DoubleType()),
-                         StructField("s", StringType())])
+                         StructField("s", StringType()),
+                         StructField("b", BinaryType())])
     raw = spark.createDataFrame([(x,) for x in lines], "value string")
     env = parse_wal2json_v2(raw, schema, track_unchanged=True)
     by_lsn = {r["lsn"]: r for r in env.collect()}
@@ -650,13 +656,16 @@ def test_wal2json_v2_edges_checked(spark):
 
     ins = by_lsn[[x for x in lsns if x.endswith("0A")][0]]
     assert (ins["new"]["id"], ins["new"]["v"], ins["new"]["s"]) == (1, 1.5, "x")
+    assert bytes(ins["new"]["b"]) == b"\x0a\xff"   # bytea hex unhexed
     assert list(ins["unchanged"]) == []
     bad = by_lsn[[x for x in lsns if x.endswith("0F")][0]]
     assert bad["new"]["v"] is None       # try_cast: bad text -> NULL field
     assert bad["new"]["s"] is None       # JSON null -> SQL NULL
+    assert bad["new"]["b"] is None       # bad hex -> NULL, not raw text
     assert list(bad["unchanged"]) == []  # present-but-null is NOT unchanged
     kc = by_lsn[[x for x in lsns if x.endswith("10")][0]]
     assert kc["old"]["id"] == 1 and kc["new"]["id"] == 2
+    assert bytes(kc["new"]["b"]) == b""  # empty bytea
     assert list(kc["unchanged"]) == ["s"]  # 's' omitted from columns
 
     # the standard pipeline: controls dropped, key change retires id=1
@@ -1046,11 +1055,11 @@ def test_pgoutput_parse_never_raises_fuzz():
 
 
 def test_bronze_generic_decode_and_jvm_route(spark):
-    """Bronze/silver split pinned: the generic decode is the ONLY Python
-    pass (exactly one MapInPandas in the routed plan), routing types with
-    checked casts ('oops' -> NULL), surfaces 'u' kinds as unchanged
-    names, keeps unknown-relid rows in bronze, and reads schema columns
-    absent from the wire as NULL (additive evolution)."""
+    """Bronze/silver split pinned: routing types with checked casts
+    ('oops' -> NULL), surfaces 'u' kinds as unchanged names, keeps
+    unknown-relid rows in bronze, and reads schema columns absent from
+    the wire as NULL (additive evolution). The one-Python-pass plan
+    shape is pinned for every decoder below."""
     from pgcdc_spark.cdc.pgoutput import (
         UNCHANGED_TOAST, decode_pgoutput_generic, encode_insert,
         encode_update, route_table)
@@ -1069,9 +1078,9 @@ def test_bronze_generic_decode_and_jvm_route(spark):
     )
     bronze = decode_pgoutput_generic(msgs, rels)
     rows = {r["lsn"]: r for r in bronze.collect()}
-    assert rows["0/0000000000000004"]["relid"] == 99    # retained
-    assert rows["0/0000000000000004"]["vals"] is None   # but unregistered
-    assert list(rows["0/0000000000000002"]["kinds"]) == ["t", "u"]
+    assert rows[4]["relid"] == 99    # retained
+    assert rows[4]["vals"] is None   # but unregistered
+    assert rows[2]["kinds"] == "tu"
 
     schema = StructType([
         StructField("id", LongType()),
@@ -1079,8 +1088,6 @@ def test_bronze_generic_decode_and_jvm_route(spark):
         StructField("added_later", StringType()),   # not on the wire
     ])
     routed = route_table(bronze, 1, rels[1], schema, track_unchanged=True)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, "route must add no Python pass"
     out = {r["lsn"]: r for r in routed.collect()}
     assert out["0/0000000000000001"]["new"]["v"] == 1.5
     assert out["0/0000000000000001"]["new"]["added_later"] is None
@@ -1090,6 +1097,44 @@ def test_bronze_generic_decode_and_jvm_route(spark):
     assert out["0/0000000000000003"]["new"]["id"] == 8
     assert "0/0000000000000004" not in out               # other relid
 
+
+
+@pytest.mark.parametrize("decoder", ["decode_pgoutput", "decode_pgoutput_v2",
+                                     "decode_pgoutput_2pc", "route_table"])
+def test_pgoutput_decoders_run_one_python_pass(spark, decoder):
+    """Every pgoutput row decoder is the one bronze byte pass plus JVM
+    typing: exactly one MapInPandas in its executed plan, whatever the
+    protocol layer composed around it."""
+    from pgcdc_spark.cdc import pgoutput as P
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    msgs = spark.createDataFrame(
+        [(lsn, bytearray(b)) for lsn, b in [
+            (0, P.encode_relation(1, "public", "t", ["id", "v"])),
+            (10, P.encode_insert(1, [1, 11])),
+            (20, P.encode_stream_start(5)),
+            (30, P.stream_wrap(5, P.encode_update(1, [1, 12]))),
+            (40, P.encode_stream_stop()),
+            (50, P.encode_stream_commit(5, 55, 56, 0)),
+            (60, P.encode_begin_prepare(61, 62, 0, 9, "g")),
+            (70, P.encode_insert(1, [2, 21])),
+            (80, P.encode_prepare(81, 82, 0, 9, "g")),
+            (90, P.encode_commit_prepared(91, 92, 0, 9, "g")),
+        ]],
+        "lsn long, payload binary",
+    )
+    schema = StructType([StructField("id", LongType()),
+                         StructField("v", LongType())])
+    if decoder == "route_table":
+        out = P.route_table(P.decode_pgoutput_generic(msgs), 1, ["id", "v"],
+                            schema)
+    else:
+        out = getattr(P, decoder)(msgs, schema)
+    assert out.collect()
+    # after the run AQE prints the final plan, then the initial one
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, plan
 
 def test_pgoutput_v2_streamed_toast_carry(spark):
     """The v2 x TOAST interaction: a COMMITTED streamed transaction whose

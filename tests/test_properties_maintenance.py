@@ -517,62 +517,139 @@ def test_toast_fold_any_split_equals_batch(spark, ops, cuts, perm_seed,
     assert folded == truth
 
 
-# --- bronze route == direct typed decode --------------------------------------
-# The multi-table bronze/silver split must be a pure refactoring of the
-# typed decoder: for any message mix, route_table over the generic
-# envelope yields EXACTLY decode_pgoutput's typed envelope (images,
-# checked-cast NULLs, unchanged-TOAST names, old tuples). Random
-# messages hit the hazard shapes: 'u' datums, genuine NULLs, malformed
-# numerics, key-only old tuples.
+# --- pgoutput decode == a model of the wire -----------------------------------
+# decode_pgoutput and route_table over the bronze frame are one byte pass
+# plus one JVM typing helper, so comparing them with each other would
+# check nothing. Both are compared with frames computed HERE from the
+# generated values: every Postgres text rendering the typing handles
+# (bool 't'/'f', date, timestamp, numeric, bytea hex) next to malformed
+# text of each, genuine NULLs and unchanged-TOAST datums, in insert /
+# update / key-only-old update / delete messages mixed with begin,
+# commit, truncate (this table's and another's) and corrupt bytes.
 
-_val = st.sampled_from(["7", "1.5", None, "junk", "UNCH"])
-_msg = st.tuples(
-    st.sampled_from(["I", "U", "UO", "D"]),
-    _val, _val,
+_PG_COLS = [  # (name, Spark type, [(wire text, expected value)])
+    ("id", "bigint", [("7", 7), ("-3", -3), ("junk", None), ("1.5", None)]),
+    ("ok", "boolean", [("t", True), ("f", False), ("maybe", None)]),
+    ("d", "date", [("2024-03-01", "date:2024-03-01"),
+                   ("2024-13-40", None), ("someday", None)]),
+    ("at", "timestamp", [("2024-03-01 10:23:54.5",
+                          "ts:2024-03-01T10:23:54.500000"),
+                         ("not-a-time", None)]),
+    ("amt", "decimal(12,2)", [("12.34", "dec:12.34"), ("-0.50", "dec:-0.50"),
+                              ("NaN-ish", None)]),
+    ("blob", "binary", [("\\x0aff", b"\x0a\xff"), ("\\x", b""),
+                        ("\\xzz", None), ("\\xabc", None)]),
+]
+_NULL, _UNCH = ("<null>", None), ("<unchanged>", None)
+
+
+def _pg_value(col):
+    return st.sampled_from(col[2] + [_NULL, _UNCH])
+
+
+_pg_tuple = st.tuples(*[_pg_value(c) for c in _PG_COLS])
+_pg_msg = st.one_of(
+    st.tuples(st.sampled_from(["I", "U", "UO", "D"]), _pg_tuple),
+    st.tuples(st.sampled_from(["B", "C", "T", "T_other"])),
+    st.tuples(st.just("cut"), _pg_tuple, st.integers(min_value=1)),
+    st.tuples(st.just("junk"), st.binary(max_size=8)),
 )
 
 
-@given(msgs=st.lists(_msg, min_size=1, max_size=10))
+def _pg_expected(v):
+    import datetime
+    from decimal import Decimal
+
+    if isinstance(v, str):
+        kind, text = v.split(":", 1)
+        if kind == "date":
+            return datetime.date.fromisoformat(text)
+        if kind == "ts":
+            return datetime.datetime.fromisoformat(text)
+        return Decimal(text)
+    return v
+
+
+@given(msgs=st.lists(_pg_msg, min_size=1, max_size=10))
 @settings(**_SETTINGS)
 def test_bronze_route_equals_typed_decode(spark, msgs):
     from pgcdc_spark.cdc.pgoutput import (
         UNCHANGED_TOAST, decode_pgoutput, decode_pgoutput_generic,
-        encode_delete, encode_insert, encode_update, route_table)
+        encode_begin, encode_commit, encode_delete, encode_insert,
+        encode_truncate, encode_update, route_table)
     from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType)
+        StructField, StructType, _parse_datatype_string)
 
-    def v(x):
-        return UNCHANGED_TOAST if x == "UNCH" else x
+    names = [c[0] for c in _PG_COLS]
+    schema = StructType([StructField(n, _parse_datatype_string(t))
+                         for n, t, _ in _PG_COLS])
 
-    payloads = []
-    for i, (kind, a, b) in enumerate(msgs):
-        vals = [v(a), v(b)]
-        if kind == "I":
-            payloads.append((i + 1, encode_insert(1, vals)))
-        elif kind == "U":
-            payloads.append((i + 1, encode_update(1, vals)))
-        elif kind == "UO":
-            payloads.append(
-                (i + 1, encode_update(1, vals, old_values=[v(a), None],
-                                      old_kind=b"K")))
+    def wire(tup):
+        return [UNCHANGED_TOAST if x == _UNCH else None if x == _NULL
+                else x[0] for x in tup]
+
+    def image(tup):
+        return {n: None if x in (_NULL, _UNCH) else _pg_expected(x[1])
+                for n, x in zip(names, tup)}
+
+    payloads, want = [], []  # want: (lsn, tag, new, old, unchanged, routed)
+    for lsn, m in enumerate(msgs, start=1):
+        kind = m[0]
+        if kind in ("I", "U", "UO", "D"):
+            tup = m[1]
+            unch = [n for n, x in zip(names, tup) if x == _UNCH]
+            if kind == "I":
+                buf, row = encode_insert(1, wire(tup)), (
+                    "insert", image(tup), None, unch)
+            elif kind == "U":
+                buf, row = encode_update(1, wire(tup)), (
+                    "update", image(tup), None, unch)
+            elif kind == "UO":  # REPLICA IDENTITY DEFAULT: key-only old
+                key = (tup[0],) + (_NULL,) * (len(names) - 1)
+                buf = encode_update(1, wire(tup), old_values=wire(key),
+                                    old_kind=b"K")
+                row = ("update", image(tup), image(key), unch)
+            else:
+                buf, row = encode_delete(1, wire(tup)), (
+                    "delete", None, image(tup), None)
+            routed = True
+        elif kind == "cut":  # a strict prefix of an insert is corrupt
+            full = encode_insert(1, wire(m[1]))
+            buf = full[:1 + m[2] % (len(full) - 1)]
+            row, routed = ("_corrupt", None, None, None), len(buf) >= 5
+        elif kind == "junk":  # no message kind starts with a NUL byte
+            buf, row, routed = b"\x00" + m[1], ("_corrupt", None, None,
+                                                 None), False
         else:
-            payloads.append((i + 1, encode_delete(1, vals)))
-    df = spark.createDataFrame(
-        [(l, bytearray(p)) for l, p in payloads], "lsn long, payload binary"
-    )
-    rels = {1: ["id", "v"]}
-    schema = StructType([StructField("id", LongType()),
-                         StructField("v", DoubleType())])
+            buf, tag = {
+                "B": (encode_begin(lsn, 0, 1), "begin"),
+                "C": (encode_commit(lsn, lsn, 0), "commit"),
+                "T": (encode_truncate([2, 1]), "truncate"),
+                "T_other": (encode_truncate([2]), "truncate_other"),
+            }[kind]
+            row, routed = (tag, None, None, None), False
+        payloads.append((lsn, bytearray(buf)))
+        want.append((f"0/{lsn:016X}",) + row + (routed,))
 
-    def norm(frame):
+    df = spark.createDataFrame(payloads, "lsn long, payload binary")
+    rels = {1: names}
+
+    def got(frame):
+        def plain(img):
+            if img is None:
+                return None
+            d = img.asDict()
+            return {k: bytes(v) if isinstance(v, bytearray) else v
+                    for k, v in d.items()}
+
         return sorted(
-            (r["lsn"], r["tag"], r["new"], r["old"],
-             tuple(r["unchanged"]) if r["unchanged"] is not None else None)
+            (r["lsn"], r["tag"], plain(r["new"]), plain(r["old"]),
+             None if r["unchanged"] is None else list(r["unchanged"]))
             for r in frame.collect()
         )
 
-    direct = norm(decode_pgoutput(df, schema, relations=rels,
-                                  track_unchanged=True))
-    routed = norm(route_table(decode_pgoutput_generic(df, rels), 1,
-                              rels[1], schema, track_unchanged=True))
-    assert routed == direct
+    direct = decode_pgoutput(df, schema, relations=rels, track_unchanged=True)
+    assert got(direct) == sorted(w[:5] for w in want)
+    routed = route_table(decode_pgoutput_generic(df, rels), 1, names, schema,
+                         track_unchanged=True)
+    assert got(routed) == sorted(w[:5] for w in want if w[5])
